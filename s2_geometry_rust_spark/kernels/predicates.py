@@ -341,13 +341,6 @@ def edge_or_vertex_crossing_scalar(a, b, c, d) -> bool:
     return vertex_crossing_scalar(a, b, c, d)
 
 
-def exact_fallback_rate() -> float:
-    """Fraction of sign() evaluations that needed exact arithmetic."""
-    if TRIAGE_TOTAL_COUNT == 0:
-        return 0.0
-    return EXACT_FALLBACK_COUNT / TRIAGE_TOTAL_COUNT
-
-
 def sign_with_cross_product(a, b, c, a_cross_b) -> int:
     """predicates.rs:123-135: triage with a PRECOMPUTED a x b (det =
     (a x b) . c against the +-3.6548eps threshold), falling through to

@@ -635,6 +635,29 @@ def conservative_region_from_row(row) -> object:
     return base  # union: id-space containment is exact already
 
 
+def conservative_coverings(rows: list, max_cells: int = 64,
+                           max_level: int = 30) -> list[np.ndarray]:
+    """Sound join-filter coverings (u64 cell ids), one per regions-table
+    row: cap rows go through the batched ``cap_coverings_batch`` (one
+    level-synchronous loop for all of them, identical per-cap results),
+    every other kind through ``conservative_covering`` of its
+    true-geometry adapter."""
+    out: list = [None] * len(rows)
+    cap_pos = [i for i, row in enumerate(rows) if row["kind"] == "cap"]
+    if cap_pos:
+        caps = [region_from_row(rows[i]).cap for i in cap_pos]
+        for i, ids in zip(cap_pos, cap_coverings_batch(
+                caps, max_cells=max_cells, max_level=max_level)):
+            out[i] = np.asarray(ids, np.uint64)
+    for i, row in enumerate(rows):
+        if out[i] is None:
+            out[i] = np.asarray(conservative_covering(
+                conservative_region_from_row(row),
+                max_cells=max_cells, max_level=max_level,
+            ), np.uint64)
+    return out
+
+
 def cover_regions(regions: DataFrame, max_cells: int = 8,
                   min_level: int = 0, max_level: int = 30,
                   level_mod: int = 1, interior: bool = False,
@@ -643,60 +666,36 @@ def cover_regions(regions: DataFrame, max_cells: int = 8,
 
     conservative=False: reference-parity coverings (region_coverer.rs
     semantics, incl. its vertex-sampling may_intersect quirks).
-    conservative=True: true-geometry adapters — the covering is a sound
-    superset of the region in leaf-id space; REQUIRED when the covering
-    is used as a join filter.
+    conservative=True: true-geometry adapters (``conservative_coverings``)
+    — the covering is a sound superset of the region in leaf-id space;
+    REQUIRED when the covering is used as a join filter.
     """
     opts = CovererOptions(
         max_cells=max_cells, min_level=min_level,
         max_level=max_level, level_mod=level_mod,
     )
-    make_region = conservative_region_from_row if conservative else region_from_row
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         coverer = S2RegionCoverer(opts)
+        cover = (coverer.get_interior_covering if interior
+                 else coverer.get_covering)
         for b in batches:
-            # conservative cap rows take the batched kernel (identical
-            # per-cap results, one level-synchronous loop per batch)
-            cap_ids: dict[int, np.ndarray] = {}
-            if conservative and len(b):
-                kinds = b["kind"].to_numpy()
-                cap_pos = np.nonzero(kinds == "cap")[0]
-                if len(cap_pos):
-                    caps = [
-                        region_from_row(b.iloc[int(i)]).cap for i in cap_pos
-                    ]
-                    covs = cap_coverings_batch(
-                        caps, max_cells=max_cells, max_level=max_level
-                    )
-                    cap_ids = {int(i): c for i, c in zip(cap_pos, covs)}
-            out_region, out_cell = [], []
-            for pos, (_, row) in enumerate(b.iterrows()):
-                if pos in cap_ids:
-                    out_region.extend([row["region_id"]] * len(cap_ids[pos]))
-                    out_cell.append(cap_ids[pos])
-                    continue
-                region = make_region(row)
-                if conservative:
-                    ids = conservative_covering(
-                        region, max_cells=max_cells, max_level=max_level
-                    )
-                else:
-                    ids = (
-                        coverer.get_interior_covering(region)
-                        if interior
-                        else coverer.get_covering(region)
-                    )
-                out_region.extend([row["region_id"]] * len(ids))
-                out_cell.append(np.asarray(ids, dtype=np.uint64))
+            rows = b.to_dict("records")
+            if conservative:
+                covs = conservative_coverings(
+                    rows, max_cells=max_cells, max_level=max_level
+                )
+            else:
+                covs = [np.asarray(cover(region_from_row(row)), np.uint64)
+                        for row in rows]
             cells = (
-                np.concatenate(out_cell)
-                if out_cell
-                else np.array([], dtype=np.uint64)
+                np.concatenate(covs) if covs else np.array([], np.uint64)
             )
             yield pd.DataFrame(
                 {
-                    "region_id": out_region,
+                    "region_id": np.repeat(
+                        b["region_id"].to_numpy(), [len(c) for c in covs]
+                    ),
                     "cell_id": cells.view(np.int64),
                     "level": ck.level(cells),
                     "cell_min": ck.range_min(cells).view(np.int64),

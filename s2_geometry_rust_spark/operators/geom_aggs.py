@@ -375,10 +375,12 @@ def nearest_boundary_join(pts: DataFrame, loop_verts: DataFrame) -> DataFrame:
     S2Loop.distance_to_boundary_batch / project_to_boundary_batch).
 
     Per (point, loop): distance = min over vertices of acos(p.v) ==
-    acos(max dot) (valid while every |dot| <= 1, guaranteed for
-    distinct unit vectors), projection = the earliest vertex attaining
-    the minimal squared Euclidean distance (the reference's strict-<
-    scan == lexicographic struct-min on (d2, vid)).
+    acos(max dot), the max taken over dots with |dot| <= 1 only — like
+    the kernel twin, which skips the NaN acos of an out-of-range dot (a
+    point on a vertex can round to dot = 1 + 1ulp); projection = the
+    earliest vertex attaining the minimal squared Euclidean distance
+    (the reference's strict-< scan == lexicographic struct-min on
+    (d2, vid)).
 
     Scale shape: pure whole-stage codegen — broadcast the (tiny) vertex
     table, one shuffle for the per-(point, loop) aggregate, then a
@@ -402,7 +404,7 @@ def nearest_boundary_join(pts: DataFrame, loop_verts: DataFrame) -> DataFrame:
         + (F.col("pz") - F.col("vz")) * (F.col("pz") - F.col("vz"))
     )
     g = j.groupBy("point_id", "region_id").agg(
-        F.max(dot).alias("max_dot"),
+        F.max(F.when(F.abs(dot) <= 1.0, dot)).alias("max_dot"),
         F.min(F.struct(d2.alias("d2"), F.col("vid").alias("vid"))).alias("m"),
     )
     return (

@@ -2,25 +2,31 @@
 
 Filter stage — the scale-critical part.  A covering cell C contains a
 point p iff ``parent(p.cell_id, level(C)) == C`` (cell_id.rs:355-357
-range containment, re-expressed as ancestor equality).  So instead of a
-range/theta join (which Spark executes as a nested-loop), we:
+range containment, re-expressed as ancestor equality), so candidate
+generation never needs a range/theta join (which Spark executes as a
+nested loop).  Every route builds sound coverings with the same
+``coverings.conservative_coverings``; they differ in how candidates are
+produced:
 
-1. collect the *distinct levels* present in the covering table (tiny:
-   <= 31 values, typically <= 8),
-2. explode each point into one row per distinct level with its ancestor
-   at that level — a pure codegen bit expression, fan-out = #levels,
-3. hash-equi-join ancestors against ``broadcast(coverings)`` on exact
-   cell-id equality.
+1. literal InSet (small covering sets, the common case): each region's
+   covering compiles to ``parent(cell, L) IN (...)`` codegen filters —
+   no join at all;
+2. driver ancestor join (past ~1k covering cells): each point explodes
+   into one ancestor per distinct covering level (a pure codegen bit
+   expression, fan-out = #levels) and hash-joins
+   ``broadcast(coverings)`` on exact cell-id equality;
+3. distributed ancestor join (large region tables): the coverings come
+   from the distributed ``cover_regions`` operator, and AQE picks
+   broadcast vs shuffle (optionally with explicit hot-cell salting).
 
-No shuffle of the big side, no nested loop, and Catalyst prunes/pushes
-everything around the join.  For covering tables too large to broadcast
-there's a shuffle variant (same keys, sort-merge).
-
-Refine stage — exact containment per region kind, vectorized per
-(batch x region) group inside one ``mapInPandas``: winding-number PIP
-for loops (loop.rs:372-394 via kernels.loops), chord-angle test for
-caps (cap.rs:227-237), interval algebra for rects (latlng_rect.rs).
-Region parameters ride along as a broadcast dict.
+Refine stage — one Arrow boolean pandas_udf filter for every route
+(``_refine``): exact containment per region kind, caps in one
+vectorized chord pass over the batch (cap.rs:227-237), loops (winding-
+number PIP, loop.rs:372-394), polygons (shell-minus-holes) and rects
+(latlng_rect.rs interval algebra) per (batch x region) group.  The
+routes differ only in where the region geometry comes from: a
+broadcast of the collected rows on the driver routes, columns joined
+inline on region_id on the distributed route.
 """
 
 from __future__ import annotations
@@ -30,12 +36,21 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import BooleanType
 
 from ..functions import cell_parent
+from ..kernels import cellid as ck
+from ..kernels import chord
 from ..kernels import latlng as lk
-from .coverings import region_from_row
+from ..kernels import predicates as pred
+from ..plans.salting import salted_join
+from .coverings import conservative_coverings, cover_regions, region_from_row
 
-_REFINABLE = {"loop", "cap", "rect", "polygon"}
+# Region columns the refine reads: kind and p0-p2 for the cap pass, the
+# rest to build loop/rect/polygon adapters.  ``cell_ids`` is left out on
+# purpose: only union rows carry it, and unions have no exact test.
+_GEOMETRY_COLS = ("kind", "p0", "p1", "p2", "p3", "vertices", "loops")
 
 # Conservative coverings are deterministic per (region, max_cells);
 # repeated joins against the same region set (interactive use, the
@@ -74,10 +89,43 @@ def _region_cache_key(row: dict) -> tuple:
     return tuple(sorted((k, _freeze(v)) for k, v in row.items()))
 
 
+def _driver_coverings(region_rows: dict,
+                      max_cells: int) -> dict[str, dict[int, list[int]]]:
+    """region_id -> {level: [cell ids]} of each region's conservative
+    covering, memoized in ``_COVERING_CACHE``; regions whose covering is
+    empty are left out."""
+    keys = {rid: (_region_cache_key(row), max_cells)
+            for rid, row in region_rows.items()}
+    covs = {rid: _COVERING_CACHE.get(key) for rid, key in keys.items()}
+    missing = [rid for rid, by_level in covs.items() if by_level is None]
+    if missing:
+        if len(_COVERING_CACHE) + len(missing) > 4096:
+            _COVERING_CACHE.clear()
+        fresh = conservative_coverings(
+            [region_rows[rid] for rid in missing], max_cells=max_cells
+        )
+        for rid, ids in zip(missing, fresh):
+            by_level: dict[int, list[int]] = {}
+            for cid, lv in zip(ids.view(np.int64).tolist(),
+                               ck.level(ids).tolist()):
+                by_level.setdefault(lv, []).append(cid)
+            covs[rid] = _COVERING_CACHE[keys[rid]] = by_level
+    return {rid: by_level for rid, by_level in covs.items() if by_level}
+
+
+def _no_matches(points: DataFrame) -> DataFrame:
+    # filter(False), not limit(0): limit is unsupported on streaming
+    # DataFrames, and the streaming wrapper (streaming/spatial.py) joins
+    # through here when the static region table is empty or uncoverable.
+    return points.filter(F.lit(False)).withColumn(
+        "region_id", F.lit(None).cast("string")
+    )
+
+
 def _ancestor_candidates(points: DataFrame, coverings: DataFrame,
                          levels: list[int], cell_col: str,
-                         broadcast: bool, n_salts: int = 0,
-                         hot_cells: list | None = None) -> DataFrame:
+                         broadcast: bool = False,
+                         n_salts: int = 0) -> DataFrame:
     """Join-based candidate generation for covering tables too large to
     inline as literals: explode each point into one ancestor per
     distinct covering level and hash-join on exact cell equality.
@@ -85,11 +133,11 @@ def _ancestor_candidates(points: DataFrame, coverings: DataFrame,
     Skew: when one region covers a large share of the points, its (at
     most ``max_cells``) covering cells become hot join keys — with a
     shuffle (sort-merge) join, 50% of rows can land on <= 64 reducer
-    keys.  AQE skew-join splitting is the default backstop; pass
-    ``n_salts > 0`` (with the hot cell ids, or None to auto-detect via
-    a sampled pass) for the explicit deterministic variant that also
-    holds on AQE-disabled clusters: hot fact rows take
-    salt = pmod(xxhash64(row), n_salts) — a pure row function, so
+    keys.  AQE skew-join splitting is the default backstop; ``n_salts >
+    0`` is the explicit deterministic variant that also holds on
+    AQE-disabled clusters: the hot cells are detected by a sampled pass
+    (``plans.salting.hot_keys``), hot fact rows take salt =
+    pmod(xxhash64(row), n_salts) — a pure row function, so
     retries/resume repartition identically — and the covering side
     replicates hot cells n_salts times.  Output is provably identical
     to the unsalted join (tools/pip_skew_soak.py measures the
@@ -99,24 +147,14 @@ def _ancestor_candidates(points: DataFrame, coverings: DataFrame,
         F.array(*[cell_parent(cell_col, lv) for lv in sorted(levels)])
     ).alias("_anc")
     pts = points.select("*", anc)
-    if n_salts > 0 and not broadcast:
-        from ..plans.salting import salted_join
-
-        cov = coverings.select(
-            F.col("cell_id").alias("_anc"), "region_id"
-        )
-        return salted_join(
-            pts, cov, "_anc", n_salts=n_salts, hot=hot_cells
-        ).drop("_anc")
-    cov = coverings.select(
-        F.col("cell_id").alias("_cov_cell"), "region_id"
-    )
-    if broadcast:
-        cov = F.broadcast(cov)
-    out = pts.join(cov, pts["_anc"] == cov["_cov_cell"]).drop("_anc", "_cov_cell")
+    cov = coverings.select(F.col("cell_id").alias("_anc"), "region_id")
     # A normalized covering has non-overlapping cells, so a point matches
     # at most one cell per region — no dedup needed per region.
-    return out
+    if n_salts > 0:
+        return salted_join(pts, cov, "_anc", n_salts=n_salts).drop("_anc")
+    if broadcast:
+        cov = F.broadcast(cov)
+    return pts.join(cov, "_anc").drop("_anc")
 
 
 def _literal_candidates(points: DataFrame,
@@ -152,15 +190,114 @@ def _literal_candidates(points: DataFrame,
     ).filter(F.col("region_id").isNotNull())
 
 
+def _cap_params(p0, p1, p2):
+    """(cx, cy, cz, radius_l2) of cap rows from their (lat, lng, radius)
+    degree columns: the vectorized twin of ``region_from_row(row).cap``
+    (S2Cap.from_center_degrees), bit for bit.  ``np.fmin`` is Rust's
+    f64::min: a NaN radius saturates to PI, a full cap."""
+    cx, cy, cz = lk.latlng_to_xyz(
+        lk.degrees_to_radians(p0), lk.degrees_to_radians(p1)
+    )
+    radius = np.fmin(lk.degrees_to_radians(p2), np.pi)
+    return cx, cy, cz, chord.from_radians(radius)
+
+
+def _refine_mask(lat: pd.Series, lng: pd.Series, rid: pd.Series, regions,
+                 cache: dict) -> np.ndarray:
+    """Exact containment of each candidate (point, region) row.
+
+    ``regions(rids, first)`` is the route's geometry source: given the
+    batch's distinct region ids and the first row position of each, it
+    returns ``(table, row_of)`` — ``table`` maps kind/p0/p1/p2 to arrays
+    aligned with ``rids``, and ``row_of(j)`` is the regions-table row of
+    ``rids[j]``.  Region adapters are memoized in ``cache`` by
+    region_id.  Rows of kinds without an exact test (union) keep what
+    the covering admitted."""
+    keep = np.ones(len(lat), dtype=bool)
+    if not len(lat):
+        return keep
+    lat_r = lk.degrees_to_radians(lat.to_numpy(np.float64))
+    lng_r = lk.degrees_to_radians(lng.to_numpy(np.float64))
+    x, y, z = lk.latlng_to_xyz(lat_r, lng_r)
+    # factorize numbers the region ids in order of appearance, so a row
+    # is its region's first exactly where the running max code grows
+    codes, rids = pd.factorize(rid.to_numpy())
+    first = np.flatnonzero(np.diff(np.maximum.accumulate(codes), prepend=-1))
+    table, row_of = regions(rids, first)
+    kind = np.asarray(table["kind"], dtype=object)
+    cap = kind == "cap"
+    if cap.any():
+        # one chord pass over EVERY cap row, center and radius computed
+        # once per distinct cap — per-region grouping would pay
+        # pandas/Python overhead per tiny group at high region
+        # cardinality (the distance-join shape)
+        params = _cap_params(
+            *(np.asarray(table[c], np.float64) for c in ("p0", "p1", "p2"))
+        )
+        rows = np.nonzero(cap[codes])[0]
+        cx, cy, cz, r_l2 = (v[codes[rows]] for v in params)
+        d2 = chord.between_points(cx, cy, cz, x[rows], y[rows], z[rows])
+        keep[rows] = d2 <= r_l2
+    exact = np.isin(kind, ("loop", "rect", "polygon"))
+    rest = np.nonzero(exact[codes])[0]
+    order = rest[np.argsort(codes[rest], kind="stable")]
+    bounds = np.searchsorted(codes[order], np.arange(len(rids) + 1))
+    for j in np.nonzero(exact)[0]:
+        idx = order[bounds[j]:bounds[j + 1]]
+        reg = cache.get(rids[j])
+        if reg is None:
+            if len(cache) > 65536:
+                cache.clear()
+            reg = cache[rids[j]] = region_from_row(row_of(j))
+        if kind[j] == "loop":
+            keep[idx] = reg.loop.contains_points_batch(x[idx], y[idx], z[idx])
+        elif kind[j] == "polygon":
+            # shell-minus-holes, any-poly (polygon_shape.rs)
+            keep[idx] = reg.contains_points_batch(x[idx], y[idx], z[idx])
+        else:
+            keep[idx] = reg.rect.contains_latlng_batch(lat_r[idx], lng_r[idx])
+    return keep
+
+
+def _refine(cand: DataFrame, geometry, geom_cols=()) -> DataFrame:
+    """``cand`` filtered to exact containment.  ``geometry(geom, rids,
+    first)`` is the route's geometry source for ``_refine_mask``
+    (``geom``: the batch's ``geom_cols`` Series).
+
+    A BOOLEAN Arrow pandas_udf filter, not mapInPandas: an identity
+    mapInPandas over the same candidates measured 4.3 s of pure Arrow
+    round-trip at 10.7M candidate rows (local[32]); this form cut the
+    full join 6.9 s -> 3.3 s, output hash-identical.  ExtractPythonUDFs
+    splits the filter so the null-region rows of the literal route's
+    candidate explode never reach the udf.  Exact-arithmetic fallbacks
+    are counted on the executors (``last_fallback_rate()``)."""
+    acc_total, acc_exact = _session_accumulators(cand.sparkSession)
+    cache: dict = {}
+
+    @pandas_udf(BooleanType())
+    def keep(lat: pd.Series, lng: pd.Series, rid: pd.Series,
+             *geom: pd.Series) -> pd.Series:
+        t0, e0 = pred.TRIAGE_TOTAL_COUNT, pred.EXACT_FALLBACK_COUNT
+        mask = _refine_mask(
+            lat, lng, rid,
+            lambda rids, first: geometry(geom, rids, first), cache,
+        )
+        acc_total.add(int(pred.TRIAGE_TOTAL_COUNT - t0))
+        acc_exact.add(int(pred.EXACT_FALLBACK_COUNT - e0))
+        return pd.Series(mask)
+
+    return cand.filter(keep("lat", "lng", "region_id", *geom_cols))
+
+
 DISTRIBUTED_REGION_THRESHOLD = 5000
 
 
 def point_in_region_join(points: DataFrame, regions: DataFrame,
                          cell_col: str = "cell_id", max_cells: int = 8,
                          refine: bool = True,
-                         broadcast: bool = True,
                          distributed: bool | None = None) -> DataFrame:
-    """points (must carry a leaf ``cell_col``) x regions -> matched pairs.
+    """points (must carry a leaf ``cell_col`` and lat/lng degrees) x
+    regions -> matched pairs.
 
     Returns the points columns + ``region_id`` for every (point, region)
     whose covering contains the point, refined to exact containment when
@@ -174,13 +311,9 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
     - large region sets (``distributed=True``, or auto past
       DISTRIBUTED_REGION_THRESHOLD when ``distributed=None``, which
       costs one count() job on the regions side): everything stays in
-      DataFrames — coverings via the distributed ``cover_regions``
-      operator, candidates via the ancestor-explode equi-join, and the
-      refine reads region geometry joined inline, so NO driver-side
-      collect of regions ever happens (see
-      ``point_in_region_join_distributed``).
+      DataFrames — see ``point_in_region_join_distributed`` — so NO
+      driver-side collect of regions ever happens.
     """
-    spark = points.sparkSession
     if distributed is None:
         distributed = regions.limit(
             DISTRIBUTED_REGION_THRESHOLD + 1
@@ -200,167 +333,61 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
         )
 
     # The regions side is the small side by contract; collect once and
-    # build the conservative coverings driver-side — this avoids two
-    # tiny mapInPandas stages (worker spin-up dominates them) and gives
-    # the distinct covering levels for free.
-    import numpy as np
-
-    from ..kernels import cellid as ck
-    from .coverings import (
-        cap_coverings_batch,
-        conservative_covering,
-        conservative_region_from_row,
-    )
-
-    def _by_level_of(ids_u: np.ndarray) -> dict[int, list[int]]:
-        lvls = ck.level(ids_u)
-        by_level: dict[int, list[int]] = {}
-        for cid, lv in zip(ids_u.view(np.int64), lvls):
-            by_level.setdefault(int(lv), []).append(int(cid))
-        return by_level
-
-    def _cache_put(key, by_level) -> None:
-        if len(_COVERING_CACHE) > 4096:
-            _COVERING_CACHE.clear()
-        _COVERING_CACHE[key] = by_level
-
+    # build the coverings driver-side — this avoids two tiny mapInPandas
+    # stages (worker spin-up dominates them) and gives the distinct
+    # covering levels for free.
+    spark = points.sparkSession
     region_rows = {r["region_id"]: r.asDict() for r in regions.collect()}
-
-    # Batch all uncached cap rows through the level-synchronous batched
-    # kernel first (identical per-cap results; one vectorized loop for
-    # the whole set instead of ~20 ms of Python per cap — the driver
-    # path stays fast right up to the distributed-path threshold).
-    uncached_caps = []
-    for rid, row in region_rows.items():
-        key = (_region_cache_key(row), max_cells)
-        if row["kind"] == "cap" and key not in _COVERING_CACHE:
-            uncached_caps.append((row, key))
-    if uncached_caps:
-        caps = [region_from_row(row).cap for row, _ in uncached_caps]
-        for (_, key), ids_u in zip(
-            uncached_caps, cap_coverings_batch(caps, max_cells=max_cells)
-        ):
-            _cache_put(key, _by_level_of(np.asarray(ids_u, np.uint64)))
-
-    region_covs: dict[str, dict[int, list[int]]] = {}
-    for rid, row in region_rows.items():
-        key = (_region_cache_key(row), max_cells)
-        by_level = _COVERING_CACHE.get(key)
-        if by_level is None:
-            ids_u = np.asarray(
-                conservative_covering(
-                    conservative_region_from_row(row), max_cells=max_cells
-                ),
-                np.uint64,
-            )
-            by_level = _by_level_of(ids_u)
-            _cache_put(key, by_level)
-        if by_level:
-            region_covs[rid] = by_level
+    region_covs = _driver_coverings(region_rows, max_cells)
     if not region_covs:
-        # filter(False), not limit(0): limit is unsupported on streaming
-        # DataFrames, and this path must also serve the streaming
-        # wrapper (streaming/spatial.py) when the static region table
-        # is empty or uncoverable.
-        return points.filter(F.lit(False)).withColumn(
-            "region_id", F.lit(None).cast("string")
-        )
+        return _no_matches(points)
 
     # Literal InSet compilation wins while the expression stays inside
     # whole-stage codegen; past ~1k covering cells the generated method
     # exceeds JIT limits and falls back to interpreted evaluation
     # (measured 16x slower at 150 regions) — switch to the
     # ancestor-explode equi-join instead.
-    total_cells = sum(
-        len(cells) for by in region_covs.values() for cells in by.values()
-    )
-    if total_cells <= 1000:
+    cov_rows = [
+        (rid, cid)
+        for rid, by_level in region_covs.items()
+        for cells in by_level.values()
+        for cid in cells
+    ]
+    if len(cov_rows) <= 1000:
         cand = _literal_candidates(points, region_covs, cell_col)
     else:
-        cov_rows = [
-            (rid, cid, lv)
-            for rid, by in region_covs.items()
-            for lv, cells in by.items()
-            for cid in cells
-        ]
         coverings = spark.createDataFrame(
-            cov_rows, "region_id string, cell_id long, level int"
+            cov_rows, "region_id string, cell_id long"
         ).coalesce(1)
-        levels = sorted({lv for _, _, lv in cov_rows})
-        cand = _ancestor_candidates(points, coverings, levels, cell_col, broadcast)
+        levels = sorted({lv for by in region_covs.values() for lv in by})
+        cand = _ancestor_candidates(points, coverings, levels, cell_col,
+                                    broadcast=True)
     if not refine:
         return cand
 
-    bc = spark.sparkContext.broadcast(region_rows)
+    # Geometry source: the collected rows ride along as one broadcast,
+    # with the cap-pass columns tabulated per region.
+    ids = pd.Index(list(region_rows))
+    cap_cols = {
+        c: np.array([row.get(c) for row in region_rows.values()],
+                    object if c == "kind" else np.float64)
+        for c in ("kind", "p0", "p1", "p2")
+    }
+    bc = spark.sparkContext.broadcast((region_rows, ids, cap_cols))
 
-    # Fleet-wide exact-arithmetic fallback accounting (BASELINE sanity
-    # target: < 1% of predicate evaluations).  Read after an action via
-    # ``last_fallback_rate()``.
-    acc_total, acc_exact = _session_accumulators(spark)
+    def geometry(_geom, rids, _first):
+        rows, index, cols = bc.value
+        pos = index.get_indexer(rids)
+        return {c: v[pos] for c, v in cols.items()}, lambda j: rows[rids[j]]
 
-    # Refine as a BOOLEAN Arrow pandas_udf filter, not mapInPandas: the
-    # exact kernels only read (lat, lng, region_id), so those three
-    # columns are all that crosses to Python (one way, plus one bool
-    # back) while every other candidate column stays JVM-side.  An
-    # identity mapInPandas over the same candidates measured 4.3 s of
-    # pure Arrow round-trip at 10.7M candidate rows (local[32]) — the
-    # refine COMPUTE is negligible; this form cut the full join 6.9 s ->
-    # 3.3 s, output hash-identical.  ExtractPythonUDFs splits the
-    # filter so the null-region rows from the candidate explode never
-    # reach the udf.
-    from pyspark.sql.functions import pandas_udf as _pandas_udf
-    from pyspark.sql.types import BooleanType as _BooleanType
-
-    regions_cache: dict[str, object] = {}
-
-    @_pandas_udf(_BooleanType())
-    def _keep(lat: pd.Series, lng: pd.Series, rid: pd.Series) -> pd.Series:
-        from ..kernels import predicates as _pred
-
-        rows = bc.value
-        t0, e0 = _pred.TRIAGE_TOTAL_COUNT, _pred.EXACT_FALLBACK_COUNT
-        n = len(lat)
-        keep = np.zeros(n, dtype=bool)
-        if n:
-            lat_r = lk.degrees_to_radians(lat.to_numpy(np.float64))
-            lng_r = lk.degrees_to_radians(lng.to_numpy(np.float64))
-            x, y, z = lk.latlng_to_xyz(lat_r, lng_r)
-            for r, idx in rid.groupby(rid).indices.items():
-                row = rows.get(r)
-                if row is None or row["kind"] not in _REFINABLE:
-                    keep[idx] = True  # no exact test — covering decides
-                    continue
-                if r not in regions_cache:
-                    if len(regions_cache) > 65536:
-                        regions_cache.clear()
-                    regions_cache[r] = region_from_row(row)
-                reg = regions_cache[r]
-                if row["kind"] == "loop":
-                    keep[idx] = reg.loop.contains_points_batch(
-                        x[idx], y[idx], z[idx])
-                elif row["kind"] == "cap":
-                    keep[idx] = reg.cap.contains_points_batch(
-                        x[idx], y[idx], z[idx])
-                elif row["kind"] == "polygon":
-                    # shell-minus-holes, any-poly (polygon_shape.rs)
-                    keep[idx] = reg.contains_points_batch(
-                        x[idx], y[idx], z[idx])
-                else:  # rect
-                    keep[idx] = reg.rect.contains_latlng_batch(
-                        lat_r[idx], lng_r[idx])
-        acc_total.add(int(_pred.TRIAGE_TOTAL_COUNT - t0))
-        acc_exact.add(int(_pred.EXACT_FALLBACK_COUNT - e0))
-        return pd.Series(keep)
-
-    return cand.filter(_keep(F.col("lat"), F.col("lng"), F.col("region_id")))
+    return _refine(cand, geometry)
 
 
 def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
                                      cell_col: str = "cell_id",
                                      max_cells: int = 64,
                                      refine: bool = True,
-                                     n_salts: int = 0,
-                                     hot_cells: list | None = None) -> DataFrame:
+                                     n_salts: int = 0) -> DataFrame:
     """Fully-distributed filter-and-refine for LARGE region tables
     (10^4+ regions): no driver-side collect of regions anywhere.
 
@@ -370,115 +397,37 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
     2. candidates via the ancestor-explode equi-join (the only data
        that reaches the driver is the <= 31 distinct covering levels);
     3. refine joins region geometry inline on region_id (AQE picks
-       broadcast vs shuffle by size) and evaluates the exact kernels
-       per (batch x region) group inside one mapInPandas.
+       broadcast vs shuffle by size) and evaluates the exact kernels in
+       the shared refine filter.
 
     ``n_salts > 0`` engages explicit deterministic salting of hot
     covering cells in step 2 (see ``_ancestor_candidates``) — for the
     one-region-covers-half-the-points skew regime on AQE-disabled
     clusters.  Defaults off; output is identical either way.
     """
-    from .coverings import cover_regions, region_from_row
-
-    spark = points.sparkSession
     covs = cover_regions(regions, max_cells=max_cells, conservative=True)
-    levels = sorted(
-        r["level"] for r in covs.select("level").distinct().collect()
-    )
+    levels = [r["level"] for r in covs.select("level").distinct().collect()]
     if not levels:
-        return points.limit(0).withColumn(
-            "region_id", F.lit(None).cast("string")
-        )
+        return _no_matches(points)
     cand = _ancestor_candidates(
         points, covs.select("region_id", "cell_id"), levels, cell_col,
-        broadcast=False, n_salts=n_salts, hot_cells=hot_cells,
+        n_salts=n_salts,
     )
     if not refine:
         return cand
 
-    acc_total, acc_exact = _session_accumulators(spark)
-    geom_cols = [
-        c for c in ("kind", "p0", "p1", "p2", "p3",
-                    "vertices", "cell_ids", "loops")
-        if c in regions.columns
-    ]
-    geom = regions.select("region_id", *geom_cols)
-    joined = cand.join(geom, "region_id")
-    out_cols = cand.columns
+    # Geometry must ride the join here: no driver-side collect of
+    # regions on this path, by contract.
+    geom_cols = [c for c in _GEOMETRY_COLS if c in regions.columns]
+    joined = cand.join(regions.select("region_id", *geom_cols), "region_id")
 
-    # Same Arrow-boolean-filter form as the literal path: geometry and
-    # coordinates ship to Python ONE way and a single bool comes back —
-    # the candidate's payload columns never cross Arrow.  (Geometry
-    # must still ride the join here: no driver-side collect of regions
-    # on this path, by contract.)
-    from pyspark.sql.functions import pandas_udf as _pandas_udf
-    from pyspark.sql.types import BooleanType as _BooleanType
+    def geometry(geom, _rids, first):
+        geo = dict(zip(geom_cols, geom))
+        table = {c: geo[c].to_numpy()[first]
+                 for c in ("kind", "p0", "p1", "p2") if c in geo}
+        return table, lambda j: {c: s.iloc[first[j]] for c, s in geo.items()}
 
-    regions_cache: dict[str, object] = {}
-
-    @_pandas_udf(_BooleanType())
-    def _keep(*cols: pd.Series) -> pd.Series:
-        from ..kernels import chord as _chord
-        from ..kernels import predicates as _pred
-
-        lat, lng, rid = cols[0], cols[1], cols[2]
-        geo = dict(zip(geom_cols, cols[3:]))
-        kind_s = geo["kind"]
-        t0, e0 = _pred.TRIAGE_TOTAL_COUNT, _pred.EXACT_FALLBACK_COUNT
-        n = len(lat)
-        keep = np.zeros(n, dtype=bool)
-        if n:
-            lat_r = lk.degrees_to_radians(lat.to_numpy(np.float64))
-            lng_r = lk.degrees_to_radians(lng.to_numpy(np.float64))
-            x, y, z = lk.latlng_to_xyz(lat_r, lng_r)
-            for kind, kidx in kind_s.groupby(kind_s).indices.items():
-                if kind == "cap":
-                    # one vectorized pass over EVERY cap row in the
-                    # batch — per-region grouping would pay pandas/
-                    # Python overhead per tiny group at high region
-                    # cardinality (the distance-join shape)
-                    clat = lk.degrees_to_radians(
-                        geo["p0"].iloc[kidx].to_numpy(np.float64))
-                    clng = lk.degrees_to_radians(
-                        geo["p1"].iloc[kidx].to_numpy(np.float64))
-                    cx, cy, cz = lk.latlng_to_xyz(clat, clng)
-                    r_l2 = _chord.from_radians(lk.degrees_to_radians(
-                        geo["p2"].iloc[kidx].to_numpy(np.float64)))
-                    d2 = _chord.between_points(
-                        cx, cy, cz, x[kidx], y[kidx], z[kidx])
-                    keep[kidx] = d2 <= r_l2
-                    continue
-                if kind not in _REFINABLE:
-                    keep[kidx] = True
-                    continue
-                rsub = rid.iloc[kidx]
-                for r, ridx_local in rsub.groupby(rsub).indices.items():
-                    idx = kidx[ridx_local]
-                    if r not in regions_cache:
-                        if len(regions_cache) > 65536:
-                            regions_cache.clear()
-                        i0 = idx[0]
-                        row = {c: geo[c].iloc[i0] for c in geom_cols}
-                        row["region_id"] = r
-                        regions_cache[r] = region_from_row(row)
-                    reg = regions_cache[r]
-                    if kind == "loop":
-                        keep[idx] = reg.loop.contains_points_batch(
-                            x[idx], y[idx], z[idx])
-                    elif kind == "polygon":
-                        keep[idx] = reg.contains_points_batch(
-                            x[idx], y[idx], z[idx])
-                    else:  # rect
-                        keep[idx] = reg.rect.contains_latlng_batch(
-                            lat_r[idx], lng_r[idx])
-        acc_total.add(int(_pred.TRIAGE_TOTAL_COUNT - t0))
-        acc_exact.add(int(_pred.EXACT_FALLBACK_COUNT - e0))
-        return pd.Series(keep)
-
-    args = [F.col("lat"), F.col("lng"), F.col("region_id")] + [
-        F.col(c) for c in geom_cols
-    ]
-    return joined.filter(_keep(*args)).select(*out_cols)
+    return _refine(joined, geometry, geom_cols).select(*cand.columns)
 
 
 def last_fallback_rate() -> float | None:

@@ -339,7 +339,7 @@ WITH w AS (
 ), wt AS (
   SELECT doc_id, CAST({mixed} % 2001 AS BIGINT) - 1000 AS wgt FROM h
 ), s AS (
-  SELECT doc_id, count(*) AS n_tokens, sum(wgt) AS logit
+  SELECT doc_id, count(*) AS n_tokens, CAST(sum(wgt) AS BIGINT) AS logit
   FROM wt GROUP BY doc_id
 )
 SELECT d.doc_id,
@@ -2341,7 +2341,7 @@ def loop_nearest_boundary_sql(table: str = "customer",
                               key: str = "c_custkey") -> str:
     """Mirror of geom_aggs.nearest_boundary_join (loop.rs:523-577, the
     reference's nearest-VERTEX simplified semantics): distance =
-    acos(max dot) nano-rounded (numpy vs DuckDB acos agree to ~1 ulp,
+    acos(max dot over |dot| <= 1) nano-rounded (numpy vs DuckDB acos agree to ~1 ulp,
     absorbed like loop_stats), projection = lexicographic struct-min on
     (d2, vid) — identical pure +,-,*,/ double arithmetic on identical
     inlined vertex literals, so the selection is bit-deterministic on
@@ -2374,7 +2374,8 @@ j AS (
   FROM p CROSS JOIN v
 ),
 g AS (
-  SELECT point_id, region_id, max(dot) AS max_dot,
+  SELECT point_id, region_id,
+         max(dot) FILTER (WHERE abs(dot) <= 1) AS max_dot,
          min(struct_pack(d2 := d2, vid := vid)) AS m
   FROM j GROUP BY point_id, region_id
 )

@@ -132,3 +132,21 @@ def test_classifier_gate_materialize_identical(spark, docs):
     a = sorted(map(tuple, classifier_gate(docs, 0.5).collect()))
     b = sorted(map(tuple, classifier_gate(docs, 0.5, materialize=True).collect()))
     assert a == b
+
+
+def test_oracle_logit_is_integer_typed():
+    """DuckDB's sum over BIGINT is HUGEINT, which reaches pandas as
+    float64; the oracle casts it back so its logit dtype matches the
+    engine's LongType (the gate oracle composes the same CTE)."""
+    import duckdb
+
+    from s2_geometry_rust_spark import oracle
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT * FROM (VALUES "
+                "(0::BIGINT, 'the quick brown fox'), (1::BIGINT, ''), "
+                "(2::BIGINT, 'one one')) t(doc_id, text)")
+    for sql in (oracle.classifier_scores_sql(N_BUCKETS),
+                oracle.classifier_gate_sql(0.6, N_BUCKETS)):
+        df = con.execute(sql).fetchdf()
+        assert len(df) and df["logit"].dtype.kind == "i", df.dtypes

@@ -162,3 +162,40 @@ def test_operator_matches_kernel(spark, sf_dir):
             assert r["dist_nano"] == round(dist[i] * 1e9)
             assert (r["proj_x"], r["proj_y"], r["proj_z"]) == (
                 proj[i][0], proj[i][1], proj[i][2])
+
+
+def test_point_on_vertex_skips_out_of_range_dot(spark, monkeypatch):
+    """A point on candy_cane's vertex 0 normalizes to dot = 1 + 1ulp with
+    that vertex: acos of it is NaN (Spark) or an error (DuckDB).  The
+    operator and the oracle take the max over |dot| <= 1 only, as the
+    kernel skips the NaN, so dist_nano is the kernel's, never NULL."""
+    import duckdb
+
+    from s2_geometry_rust_spark import oracle
+    from s2_geometry_rust_spark.operators.geom_aggs import nearest_boundary_join
+
+    loop = S2Loop.from_degrees(fixtures.LOOPS["candy_cane"])
+    vx, vy, vz = (float(c) for c in loop.vertices[0])
+    n = math.sqrt(vx * vx + vy * vy + vz * vz)
+    p = (vx / n, vy / n, vz / n)
+    assert p[0] * vx + p[1] * vy + p[2] * vz > 1.0  # the case under test
+    want = round(float(loop.distance_to_boundary_batch(
+        np.array([p[0]]), np.array([p[1]]), np.array([p[2]]))[0]) * 1e9)
+
+    pts = spark.createDataFrame([(1, vx, vy, vz)],
+                                "point_id long, x double, y double, z double")
+    got = nearest_boundary_join(
+        pts, fixtures.loop_vertices(spark, ["candy_cane"])
+    ).collect()
+    assert [r["dist_nano"] for r in got] == [want]
+
+    monkeypatch.setattr(
+        oracle, "derived_points_sql",
+        lambda *_: f"SELECT 1 AS point_id, CAST('{vx!r}' AS DOUBLE) AS x, "
+                   f"CAST('{vy!r}' AS DOUBLE) AS y, "
+                   f"CAST('{vz!r}' AS DOUBLE) AS z",
+    )
+    rows = duckdb.connect().execute(
+        oracle.loop_nearest_boundary_sql()
+    ).fetchall()
+    assert [r[2] for r in rows if r[1] == "candy_cane"] == [want]

@@ -219,6 +219,14 @@ class TestSmallWrapperPorts:
         assert S2Cap.from_center_area(
             (0.0, 1.0, 0.0), 4.0 * math.pi).is_full()
 
+    def test_cap_from_center_area_clamps_to_full(self):
+        """cap.rs:102-112 builds the radius with S1ChordAngle::from_length2,
+        which clamps at 4: any area past 4pi is the full cap."""
+        from s2_geometry_rust_spark.kernels.caps import S2Cap
+
+        cap = S2Cap.from_center_area((0.0, 1.0, 0.0), 5.0 * math.pi)
+        assert cap.is_full() and cap.radius_l2 == 4.0
+
     def test_immediate_parent(self):
         import pytest
 

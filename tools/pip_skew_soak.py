@@ -122,16 +122,14 @@ def main(n_points: int = 2_000_000, n_small: int = 2000,
     cov_sel = covs.select("region_id", "cell_id")
 
     t0 = time.time()
-    cand_plain = _ancestor_candidates(pts, cov_sel, levels, "cell_id",
-                                      broadcast=False)
+    cand_plain = _ancestor_candidates(pts, cov_sel, levels, "cell_id")
     h_plain = partition_histogram(cand_plain)
     t_plain = time.time() - t0
     print(f"UNSALTED candidates: {h_plain}  wall={t_plain:.1f}s")
 
     t0 = time.time()
     cand_salt = _ancestor_candidates(pts, cov_sel, levels, "cell_id",
-                                     broadcast=False, n_salts=32,
-                                     hot_cells=None)
+                                     n_salts=32)
     h_salt = partition_histogram(cand_salt)
     t_salt = time.time() - t0
     print(f"SALTED   candidates: {h_salt}  wall={t_salt:.1f}s")
