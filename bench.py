@@ -130,23 +130,11 @@ def main() -> None:
                 if bests[cpus] is None or leg["best_sec"] < bests[cpus]["best_sec"]:
                     bests[cpus] = leg
 
+        # A fixed number of session pairs, never topped up: extra pairs
+        # bought only while the ratio reads low bias it upward.
         for _ in range(SCALING_SESSIONS):
             run_session_pair()
-        # Adaptive top-up (round-4 artifact lesson: one loaded-box bench
-        # read 0.78 nominal while the identical protocol read 0.90-0.91
-        # on the same day — the hi leg needs 8 idle cores and is hit
-        # disproportionately by transient neighbor load, and a capacity
-        # ratio can only be under-sampled, never over-sampled).  While
-        # the nominal ratio reads below the target band, buy up to 2
-        # extra interleaved session pairs: same estimator, more chances
-        # for the hi leg to see an idle window.
-        for _ in range(2):
-            lo_c, hi_c = sorted(SCALING_PAIR)
-            nom = ((SCALING_DOCS / bests[hi_c]["best_sec"])
-                   / (SCALING_DOCS / bests[lo_c]["best_sec"])) / (hi_c / lo_c)
-            if nom >= 0.82:
-                break
-            run_session_pair()
+        results["scaling_session_pairs"] = SCALING_SESSIONS
         for cpus in SCALING_PAIR:
             best = bests[cpus]
             throughput[cpus] = SCALING_DOCS / best["best_sec"]

@@ -26,11 +26,18 @@ number PIP, loop.rs:372-394), polygons (shell-minus-holes) and rects
 (latlng_rect.rs interval algebra) per (batch x region) group.  The
 routes differ only in where the region geometry comes from: a
 broadcast of the collected rows on the driver routes, columns joined
-inline on region_id on the distributed route.
+inline on region_id on the distributed route.  There the list-typed
+geometry (``vertices``, ``loops``) crosses the Arrow boundary as JSON
+strings, encoded once per region row before the join and decoded only
+when a loop or polygon adapter is built: the JVM's cost to assemble an
+Arrow batch with list columns grows faster than linearly in its rows,
+even when every value is null (as it is for caps), while a string
+column costs about as much as a scalar one.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 
 import numpy as np
@@ -47,10 +54,14 @@ from ..kernels import predicates as pred
 from ..plans.salting import salted_join
 from .coverings import conservative_coverings, cover_regions, region_from_row
 
-# Region columns the refine reads: kind and p0-p2 for the cap pass, the
-# rest to build loop/rect/polygon adapters.  ``cell_ids`` is left out on
-# purpose: only union rows carry it, and unions have no exact test.
-_GEOMETRY_COLS = ("kind", "p0", "p1", "p2", "p3", "vertices", "loops")
+# Region columns the distributed refine reads: kind and p0-p2 for the
+# cap pass, the rest to build loop/rect/polygon adapters.  ``cell_ids``
+# is left out on purpose: only union rows carry it, and unions have no
+# exact test.  The list-typed columns travel as ``to_json`` strings (see
+# _region_geometry), so every column of the refine's Arrow batch is a
+# scalar.
+_SCALAR_GEOMETRY_COLS = ("kind", "p0", "p1", "p2", "p3")
+_LIST_GEOMETRY_COLS = ("vertices", "loops")
 
 # Conservative coverings are deterministic per (region, max_cells);
 # repeated joins against the same region set (interactive use, the
@@ -275,8 +286,8 @@ def _refine(cand: DataFrame, geometry, geom_cols=()) -> DataFrame:
     cache: dict = {}
 
     @pandas_udf(BooleanType())
-    def keep(lat: pd.Series, lng: pd.Series, rid: pd.Series,
-             *geom: pd.Series) -> pd.Series:
+    def _keep(lat: pd.Series, lng: pd.Series, rid: pd.Series,
+              *geom: pd.Series) -> pd.Series:
         t0, e0 = pred.TRIAGE_TOTAL_COUNT, pred.EXACT_FALLBACK_COUNT
         mask = _refine_mask(
             lat, lng, rid,
@@ -286,7 +297,7 @@ def _refine(cand: DataFrame, geometry, geom_cols=()) -> DataFrame:
         acc_exact.add(int(pred.EXACT_FALLBACK_COUNT - e0))
         return pd.Series(mask)
 
-    return cand.filter(keep("lat", "lng", "region_id", *geom_cols))
+    return cand.filter(_keep("lat", "lng", "region_id", *geom_cols))
 
 
 DISTRIBUTED_REGION_THRESHOLD = 5000
@@ -417,17 +428,64 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
         return cand
 
     # Geometry must ride the join here: no driver-side collect of
-    # regions on this path, by contract.
-    geom_cols = [c for c in _GEOMETRY_COLS if c in regions.columns]
-    joined = cand.join(regions.select("region_id", *geom_cols), "region_id")
+    # regions on this path, by contract.  Projected before the join, so
+    # the JSON encoding runs once per region row, not per candidate.
+    region_geom = _region_geometry(regions)
+    joined = cand.join(region_geom, "region_id")
+    geom_cols = region_geom.columns[1:]
 
     def geometry(geom, _rids, first):
         geo = dict(zip(geom_cols, geom))
         table = {c: geo[c].to_numpy()[first]
                  for c in ("kind", "p0", "p1", "p2") if c in geo}
-        return table, lambda j: {c: s.iloc[first[j]] for c, s in geo.items()}
+        return table, lambda j: _geometry_row(
+            {c: s.iloc[first[j]] for c, s in geo.items()}
+        )
 
     return _refine(joined, geometry, geom_cols).select(*cand.columns)
+
+
+def _region_geometry(regions: DataFrame) -> DataFrame:
+    """region_id plus the distributed refine's region geometry: the
+    scalar columns as they are, the list-typed ones as ``to_json``
+    strings (a null list becomes a null string)."""
+    return regions.select(
+        "region_id",
+        *(c for c in _SCALAR_GEOMETRY_COLS if c in regions.columns),
+        *(F.to_json(c).alias(c)
+          for c in _LIST_GEOMETRY_COLS if c in regions.columns),
+    )
+
+
+def _geometry_row(row: dict) -> dict:
+    """``row`` with its JSON geometry decoded back to the values the
+    regions table holds, bit for bit.  Jackson writes a finite double
+    with Double.toString, which round-trips through ``float()``, and a
+    non-finite one as the quoted string "NaN", "Infinity" or
+    "-Infinity", which ``float()`` reads too; JSON has one NaN, so a
+    NaN's sign and payload bits come back canonical.  It leaves out null
+    struct fields, hence ``.get``."""
+    def num(v, cast):
+        return None if v is None else cast(v)
+
+    def latlngs(vs):
+        return None if vs is None else [
+            None if v is None else
+            {"lat": num(v.get("lat"), float), "lng": num(v.get("lng"), float)}
+            for v in vs
+        ]
+
+    out = dict(row)
+    if out.get("vertices") is not None:
+        out["vertices"] = latlngs(json.loads(out["vertices"]))
+    if out.get("loops") is not None:
+        out["loops"] = [
+            None if e is None else
+            {"poly": num(e.get("poly"), int),
+             "vertices": latlngs(e.get("vertices"))}
+            for e in json.loads(out["loops"])
+        ]
+    return out
 
 
 def last_fallback_rate() -> float | None:

@@ -1,8 +1,9 @@
 """point_in_region_join route parity: the literal-InSet, driver
 ancestor-join, distributed and salted-distributed candidate routes all
 feed the one shared refine, so each must emit exactly the brute-force
-kernel containment pairs on the same points — plus a bit-level property
-test of the shared vectorized cap pass against region_from_row."""
+kernel containment pairs on the same points — plus bit-level property
+tests of the shared vectorized cap pass against region_from_row and of
+the distributed route's JSON geometry against the Arrow list values."""
 
 import numpy as np
 import pandas as pd
@@ -19,7 +20,9 @@ from s2_geometry_rust_spark.operators.coverings import (
 from s2_geometry_rust_spark.operators.spatial_join import (
     DISTRIBUTED_REGION_THRESHOLD,
     _cap_params,
+    _geometry_row,
     _refine_mask,
+    _region_geometry,
     point_in_region_join,
     point_in_region_join_distributed,
 )
@@ -178,6 +181,131 @@ def test_route_matches_brute_force(route, points, regions, expected):
            for r in joined.select("pid", "region_id").collect()}
     assert not got - expected, sorted(got - expected)[:10]
     assert not expected - got, sorted(expected - got)[:10]
+
+
+def _python_udfs(df):
+    """(name, [argument type names]) of every Python UDF that an
+    ArrowEvalPythonExec of ``df``'s executed plan evaluates."""
+    conv = df.sparkSession.sparkContext._jvm.scala.jdk.javaapi \
+        .CollectionConverters
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        if cls == "ArrowEvalPythonExec":
+            out += [(u.name(), [a.dataType().typeName()
+                                for a in conv.asJava(u.children())])
+                    for u in conv.asJava(node.udfs())]
+        todo.extend(conv.asJava(node.children()))
+    return out
+
+
+@pytest.mark.parametrize("route", list(ROUTES))
+def test_refine_udf_is_keep_with_scalar_args(route, points, regions):
+    """Every route evaluates the refine as one UDF named ``_keep`` (the
+    name the benchmark attributes the ``arrow.refine.*`` layer by), and
+    no array-, struct- or map-typed column crosses into it."""
+    joined = ROUTES[route](points, regions)
+    joined.collect()
+    udfs = _python_udfs(joined)
+    assert [name for name, _ in udfs] == ["_keep"], udfs
+    args = udfs[0][1]
+    assert not {"array", "struct", "map"} & set(args), args
+    if route.startswith("distributed"):
+        assert len(args) == 3 + 5 + 2, args  # lat, lng, rid; scalars; JSON
+
+
+NAN_BITS = int(np.float64("nan").view(np.uint64))
+
+
+def _bits(value, key=None, one_nan=False):
+    """``value`` flattened to a tuple of tokens, each double as its
+    uint64 bit pattern (so -0.0, NaN and 1-ulp changes all show).
+    ``one_nan`` maps every NaN to the canonical NaN's bits."""
+    if value is None:
+        return (None,)
+    if isinstance(value, dict):
+        return tuple(t for k in sorted(value)
+                     for t in (k, *_bits(value[k], k, one_nan)))
+    if isinstance(value, (list, np.ndarray)):
+        return ("[", *(t for v in value for t in _bits(v, None, one_nan)),
+                "]")
+    if key == "poly":
+        return (int(value),)
+    if one_nan and np.isnan(value):
+        return (NAN_BITS,)
+    return (int(np.float64(value).view(np.uint64)),)
+
+
+def test_json_geometry_round_trips_bit_for_bit(spark):
+    """vertices/loops through ``to_json`` in Spark and the refine's
+    decoder equal the values the Arrow list path delivers, bit for bit:
+    random coordinates, signed zeros, subnormals, the largest finite
+    doubles, 1-ulp neighbours, NaN and +-inf; null lists, null vertices
+    and null coordinates too.  The one exception is pinned: JSON has a
+    single NaN, so a NaN with its sign bit set (or another payload)
+    comes back as the canonical NaN."""
+    rng = np.random.default_rng(4242)
+    special = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308,
+               1.7976931348623157e308, -1.7976931348623157e308,
+               float("nan"), float("inf"), float("-inf"), 1e23, 0.1]
+    base = np.concatenate([
+        rng.uniform(-90.0, 90.0, 200), rng.uniform(-180.0, 180.0, 200),
+        rng.choice([-1.0, 1.0], 200) * 10.0 ** rng.uniform(-320, 308, 200),
+        [90.0, -90.0, 180.0, -180.0, 45.0, 1e-7],
+    ])
+    pool = np.concatenate([
+        base, np.nextafter(base, np.inf), np.nextafter(base, -np.inf),
+        special,
+    ])
+
+    def coord():
+        return None if rng.random() < 0.02 else float(rng.choice(pool))
+
+    def verts(n):
+        return [None if rng.random() < 0.03 else
+                {"lat": coord(), "lng": coord()} for _ in range(n)]
+
+    rows = [_row("specials", "loop",
+                 vertices=[{"lat": v, "lng": -v} for v in special])]
+    for i in range(150):
+        loops = None if i % 7 == 0 else [
+            {"poly": int(rng.integers(-2**62, 2**62)),
+             "vertices": None if rng.random() < 0.1
+             else verts(int(rng.integers(0, 6)))}
+            for _ in range(int(rng.integers(0, 4)))
+        ]
+        vertices = None if i % 5 == 0 else verts(int(rng.integers(0, 9)))
+        rows.append(_row(f"r{i:03d}", "polygon", vertices=vertices,
+                         loops=loops))
+    df = spark.createDataFrame([tuple(r[c] for c in COLS) for r in rows],
+                               fixtures.REGIONS_SCHEMA)
+
+    encoded = _region_geometry(df)
+    types = dict(encoded.dtypes)
+    assert types["vertices"] == types["loops"] == "string", types
+    got = {r["region_id"]: _geometry_row(r)
+           for r in encoded.toPandas().to_dict("records")}
+    want = df.select("region_id", "vertices", "loops").toPandas()
+    assert len(got) == len(want) == len(rows)
+    for w in want.to_dict("records"):
+        g = got[w["region_id"]]
+        for c in ("vertices", "loops"):
+            assert _bits(g[c]) == _bits(w[c], one_nan=True), (w["region_id"], c)
+            if w["region_id"] != "specials":  # its lng holds -NaN
+                assert _bits(g[c]) == _bits(w[c]), (w["region_id"], c)
+    specials = want.set_index("region_id").loc["specials", "vertices"]
+    assert int(np.float64(specials[7]["lng"]).view(np.uint64)) >> 63 == 1
+    # the edge values were really exercised, non-finite ones quoted
+    text = encoded.filter("region_id = 'specials'").first()["vertices"]
+    for lit in ('"NaN"', '"Infinity"', '"-Infinity"', "-0.0", "4.9E-324"):
+        assert lit in text, lit
 
 
 def test_cap_pass_bit_identical_to_region_from_row():

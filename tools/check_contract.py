@@ -38,6 +38,37 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def _kind(col: pd.Series) -> str:
+    return {"i": "integer", "u": "integer", "f": "float"}.get(
+        col.dtype.kind, col.dtype.kind
+    )
+
+
+def compare_frames(g: pd.DataFrame, w: pd.DataFrame) -> tuple[str, str]:
+    """("OK", "") when the normalized Spark frame ``g`` equals the
+    normalized oracle frame ``w`` as the contract's value hash sees them,
+    else ("MISMATCH", why).  Column kinds count: an integer column never
+    equals a float one, even holding the same numbers, since the hash
+    reads them differently.  Widths do not (int32 against int64)."""
+    if len(g) != len(w) or list(g.columns) != list(w.columns):
+        return "MISMATCH", (f"rows {len(g)}/{len(w)} "
+                            f"cols {list(g.columns)}/{list(w.columns)}")
+    kinds = [f"{c}: {_kind(g[c])}/{_kind(w[c])}" for c in g.columns
+             if {_kind(g[c]), _kind(w[c])} == {"integer", "float"}]
+    if kinds:
+        return "MISMATCH", "integer vs float columns: " + ", ".join(kinds)
+    try:
+        # check_exact: the contract hashes VALUES — a float that differs
+        # in the last ulp is a red row there, so the local gate must be
+        # bit-strict too (a tolerant compare hid exactly such a drift in
+        # two geo queries once)
+        pd.testing.assert_frame_equal(g, w, check_dtype=False,
+                                      check_exact=True)
+    except AssertionError as ex:
+        return "MISMATCH", str(ex)[:500]
+    return "OK", ""
+
+
 def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
     import __spark_entry__ as e
     from s2_geometry_rust_spark.session import get_spark
@@ -83,25 +114,10 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
             failures += 1
             print(f"{name:28s} CANON-ERROR {ex}")
             continue
-        ok_rows = len(g) == len(w)
-        ok_cols = list(g.columns) == list(w.columns)
-        ok_vals = False
-        if ok_rows and ok_cols:
-            try:
-                # check_exact: the driver hashes VALUES — a float that
-                # differs in the last ulp is a red row there, so the
-                # local gate must be bit-strict too (a tolerant compare
-                # hid exactly such a drift in two geo queries once)
-                pd.testing.assert_frame_equal(
-                    g, w, check_dtype=False, check_exact=True
-                )
-                ok_vals = True
-            except AssertionError as ex:
-                print(str(ex)[:500])
-        status = "OK" if (ok_rows and ok_cols and ok_vals) else "MISMATCH"
+        status, why = compare_frames(g, w)
         if status != "OK":
             failures += 1
-            print(f"{name:28s} {status} rows {len(g)}/{len(w)} cols {list(g.columns)}/{list(w.columns)}")
+            print(f"{name:28s} {status} {why}")
         else:
             print(f"{name:28s} OK ({len(g)} rows)")
     spark.stop()

@@ -7,11 +7,10 @@ import os
 import sys
 
 import duckdb
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from check_contract import TABLES, norm  # noqa: E402
+from check_contract import TABLES, compare_frames, norm  # noqa: E402
 
 
 def main(*names: str) -> int:
@@ -33,21 +32,12 @@ def main(*names: str) -> int:
             continue
         want = con.execute(oracles[name]).fetchdf()
         g, w = norm(got), norm(want)
-        ok = (len(g) == len(w)) and (list(g.columns) == list(w.columns))
-        if ok:
-            try:
-                pd.testing.assert_frame_equal(
-                    g, w, check_dtype=False, check_exact=True
-                )
-            except AssertionError as ex:
-                ok = False
-                print(str(ex)[:800])
-        if ok:
+        status, why = compare_frames(g, w)
+        if status == "OK":
             print(f"{name:24s} OK ({len(g)} rows)")
         else:
             failures += 1
-            print(f"{name:24s} MISMATCH rows {len(g)}/{len(w)} "
-                  f"cols {list(g.columns)} / {list(w.columns)}")
+            print(f"{name:24s} {status} {why}")
             if len(g) and len(w):
                 print("spark head:\n", g.head(3))
                 print("oracle head:\n", w.head(3))
